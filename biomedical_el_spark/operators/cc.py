@@ -1,11 +1,22 @@
-"""Stage 3 — transitive clustering: large-star / small-star connected
-components over the match-edge table.
+"""Stage 3 — transitive clustering: connected components over the
+match-edge table.
 
 Generalizes the reference's mention→entity assignment (each mention linked
 to its argmax entity, run_e2e_span.py:570-575) to full entity-resolution
 clusters: the transitive closure of pairwise matches.
 
-Algorithm (Kiveris et al., 'Connected Components in MapReduce and
+Hybrid execution, chosen from the measured edge count (the strategy rule
+of "Hybrid Evaluation for Distributed Iterative Matrix Computation"):
+  * up to `_EDGES_PER_PARTITION` edges — the graph fits one task of the
+    round loop below, so it is solved in ONE task: a single
+    `mapInArrow` pass encodes the endpoints to sorted dense codes and
+    runs a vectorized numpy union-find (`_solve_arrow`).  One Spark job
+    after the input checkpoint, instead of ~20 scheduling-bound
+    round/certificate jobs.
+  * above it — the distributed large-star / small-star loop.
+Both produce the same rows: (node, component = min node of its class).
+
+Round loop (Kiveris et al., 'Connected Components in MapReduce and
 Beyond'): alternate
   large-star(u): connect every neighbor v > u to m = min(N(u) ∪ {u})
   small-star(u): connect every neighbor v ≤ u (v ≠ m) to m
@@ -24,8 +35,9 @@ every leaf back to the root; small star is the identity on it), so
 stopping at the certificate yields the same output as hash-stability, one
 round earlier.
 
-Each round checkpoints to truncate lineage (SURVEY.md §7b: iterative CC
-lineage blowup MUST checkpoint).  `checkpoint_dir=None` uses
+The input edge set (both paths) and each round's output are checkpointed
+to truncate lineage (SURVEY.md §7b: iterative CC lineage blowup MUST
+checkpoint).  `checkpoint_dir=None` uses
 `localCheckpoint` (executor-local blocks — fine in local mode, NOT safe
 under executor loss); pass a reliable `checkpoint_dir` (HDFS/object
 store) on a real cluster.
@@ -35,21 +47,65 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 # Target edge rows per shuffle partition inside the CC round loop.  Each
 # round is ~6 tiny shuffles over the (usually small) frontier; running
 # them at the session-wide shuffle width (sized for the big Arrow stages)
 # makes the loop pure task-scheduling overhead — measured 8.2s → 3.3s at
-# bench scale by sizing partitions to the edge count instead.
+# bench scale by sizing partitions to the edge count instead.  It is also
+# the hybrid gate: a graph of at most this many edges would fit one task
+# of the loop, so it is solved in one task by `_solve_arrow` instead.
 _EDGES_PER_PARTITION = 500_000
 
-# Edge count above which the large-star output is materialized before the
-# small-star step (see connected_components): below it, recomputing the
-# large-star subtree once is cheaper than an extra checkpoint job per
-# round; above it, the duplicated window/explode work dominates.
-_INTRA_CKPT_MIN_EDGES = 100_000
+
+def _solve_arrow(batches):
+    """mapInArrow body of the one-task path: every (src, dst) edge batch
+    of the graph → (node, component) batches.
+
+    Endpoints are encoded to dense codes in sorted order (`unique` →
+    `sort_indices` → `index_in`); Arrow's binary string order is Spark's
+    UTF8_BINARY order and integers sort numerically, so the minimum code
+    of a class is its minimum node.  Union-find on the codes, vectorized:
+    hook the larger root of every unsettled edge onto the smaller one
+    (`np.minimum.at` keeps the smallest offer per root), then pointer-jump
+    until every node points at its root.  parent[x] <= x throughout, so
+    no cycle can form.  A root with an unsettled edge either hooks, is
+    hooked onto, or — if all its neighbours hooked onto smaller roots —
+    hooks on the next pass, so the roots at least halve every two passes:
+    O(log n) passes.  No per-row Python."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    batches = [b for b in batches if b.num_rows]
+    if not batches:
+        return
+    src = pa.chunked_array([b.column(0) for b in batches])
+    dst = pa.chunked_array([b.column(1) for b in batches])
+    both = pa.chunked_array(src.chunks + dst.chunks)
+    uniq = pc.unique(both)
+    nodes = uniq.take(pc.sort_indices(uniq))
+    u = pc.index_in(src, value_set=nodes).to_numpy()
+    v = pc.index_in(dst, value_set=nodes).to_numpy()
+    parent = np.arange(len(nodes))
+    while True:
+        ru, rv = parent[u], parent[v]
+        open_ = ru != rv
+        if not open_.any():
+            break
+        u, v, ru, rv = u[open_], v[open_], ru[open_], rv[open_]
+        np.minimum.at(parent, np.maximum(ru, rv), np.minimum(ru, rv))
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+    yield pa.RecordBatch.from_arrays(
+        [nodes, nodes.take(parent)], names=["node", "component"]
+    )
 
 
 def _symmetrize(edges: DataFrame, dedup: bool = False) -> DataFrame:
@@ -140,23 +196,22 @@ def connected_components(
     dst_col: str = "url_b",
     max_iter: int = 20,
     checkpoint_dir: str | None = None,
-    round_shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Edge table → (node, component) with component = min node id of the
     cluster.  Nodes absent from `links` are not emitted (callers union
     singletons back; see plans/linkage.py).
 
-    checkpoint_dir: if given, rounds use RELIABLE `checkpoint()` into it
-    (survives executor loss — required on a real cluster); default is
-    `localCheckpoint` (local-mode / test speed).
+    Up to `_EDGES_PER_PARTITION` edges the graph is solved in one task
+    (`_solve_arrow`); above it by the star loop, whose shuffle width is
+    sized from the same edge count (observed by the input checkpoint's
+    own job), capped at the session's shuffle setting: the frontier is
+    usually far smaller than the corpus the session width was tuned for,
+    and ~6 shuffles/round × oversized task counts turn the loop into
+    scheduler overhead.  The session conf is restored on exit.
 
-    round_shuffle_partitions: shuffle width for the round loop.  Default
-    (None) sizes it from the ACTUAL edge count (counted on the
-    just-checkpointed edge set — a cheap block scan), capped at the
-    session's shuffle setting: the frontier is usually far smaller than
-    the corpus the session width was tuned for, and ~6 shuffles/round ×
-    oversized task counts turn the loop into scheduler overhead.  The
-    session conf is restored on exit."""
+    checkpoint_dir: if given, checkpoints are RELIABLE `checkpoint()`s
+    into it (survives executor loss — required on a real cluster);
+    default is `localCheckpoint` (local-mode / test speed)."""
     spark = links.sparkSession
     if checkpoint_dir is not None:
         spark.sparkContext.setCheckpointDir(checkpoint_dir)
@@ -164,47 +219,56 @@ def connected_components(
     def ckpt(df: DataFrame) -> DataFrame:
         return df.checkpoint() if checkpoint_dir is not None else df.localCheckpoint()
 
+    # both endpoint columns in their common (union-widened) type: the
+    # one-task path's output schema is that type, as the loop's is
+    node_t = links.select(src_col).union(links.select(dst_col)).schema[0].dataType
     # No _symmetrize here: _star symmetrizes its input itself, so a
     # pre-symmetrized edge set would enter round 1 with every edge
     # duplicated (sym of sym) — the round-1 window would sort twice the
     # rows for identical output (min/neighborhood ops are
     # duplicate-insensitive).  Only the self-loop filter is kept.
+    seen = Observation()
     edges = ckpt(
-        links.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-    )
-    sess_sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n_edges = edges.count()  # materialized by ckpt() — cheap block scan
-    if round_shuffle_partitions is None:
-        round_shuffle_partitions = max(
-            8, min(sess_sp, math.ceil(n_edges / _EDGES_PER_PARTITION))
+        links.select(
+            F.col(src_col).cast(node_t).alias("src"),
+            F.col(dst_col).cast(node_t).alias("dst"),
         )
-    # Checkpoint BETWEEN the two star steps on big graphs: small-star
-    # symmetrizes its input (union of both directions), so an
-    # unmaterialized large-star subtree is otherwise computed twice —
-    # once per union branch (ReusedExchange shares the exchange, but the
-    # window/explode above it re-runs).  Measured (round 6): 250k-page
-    # flagship graph (729k sym edges) CC 7.2 s → 5.2 s warm with the
-    # intermediate materialization; on small graphs (cc_customer, 30k
-    # edges) the extra per-round materialization job is pure overhead,
-    # so it is gated on the measured edge count — data-proportional,
-    # not a local-mode constant.
-    intra_ckpt = n_edges > _INTRA_CKPT_MIN_EDGES
-    spark.conf.set("spark.sql.shuffle.partitions", str(round_shuffle_partitions))
+        .filter(F.col("src") != F.col("dst"))
+        .observe(seen, F.count(F.lit(1)).alias("n"))
+    )
+    # counted by the checkpoint job itself: a separate count() would cost
+    # two more jobs (AQE runs its aggregate exchange as its own job)
+    n_edges = seen.get["n"]
+    if n_edges <= _EDGES_PER_PARTITION:
+        out_t = StructType(
+            [StructField("node", node_t), StructField("component", node_t)]
+        )
+        return edges.coalesce(1).mapInArrow(_solve_arrow, out_t)
+
+    sess_sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    round_sp = max(8, min(sess_sp, math.ceil(n_edges / _EDGES_PER_PARTITION)))
+    spark.conf.set("spark.sql.shuffle.partitions", str(round_sp))
     converged = False
     try:
         for r in range(max_iter):
-            large = _star(edges, large=True, dedup=False)
-            if intra_ckpt:
-                large = ckpt(large)
+            # Checkpoint BETWEEN the two star steps: small-star
+            # symmetrizes its input (union of both directions), so an
+            # unmaterialized large-star subtree is computed twice — once
+            # per union branch (ReusedExchange shares the exchange, but
+            # the window/explode above it re-runs).  Measured (round 6):
+            # 250k-page flagship graph (729k sym edges) CC 7.2 s → 5.2 s
+            # warm.  The loop only runs on graphs above
+            # _EDGES_PER_PARTITION edges, so this is not gated; late
+            # rounds, whose frontier has shrunk, accept the extra
+            # checkpoint job rather than a per-round count to re-gate on.
+            large = ckpt(_star(edges, large=True, dedup=False))
             edges = ckpt(_star(large, large=False))  # cut lineage every round
-            # skip the certificate after round 1: any input that is not
-            # already a star forest (i.e. any multi-hop component) needs
-            # >= 2 rounds, so the round-1 certificate can only confirm
-            # non-convergence — two wasted jobs per run.  A 1-round
-            # input pays one extra (idempotent: stars are a fixpoint of
-            # both star ops) round instead; multi-round graphs — every
-            # real link graph — save the round-1 certificate.
+            # skip the certificate after round 1: it can only pass on a
+            # graph that converges in one round (a star forest, or e.g. a
+            # triangle or any other diameter-1 component), and those pay
+            # one extra idempotent round instead (stars are a fixpoint of
+            # both star ops).  Multi-round graphs — every real link graph
+            # — save the round-1 certificate's two jobs.
             if r >= 1 and _is_star_forest(edges):
                 converged = True
                 break
